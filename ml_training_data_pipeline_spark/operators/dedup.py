@@ -247,8 +247,6 @@ def jaccard_pairs(
         # small at any corpus size while the scans it replaces grow with
         # the corpus. localCheckpoint (not cache) keeps true size stats
         # visible to AQE — see minhash_dedup's 18×-regression note.
-        from .materialize import materialize
-
         sh = materialize(sh.join(cand_docs, "doc_id", "left_semi"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
@@ -319,8 +317,6 @@ def lsh_admission_rejects(
         )
         .distinct()
     )
-    from .materialize import materialize
-
     cand = (
         delta_bands.join(corpus_bands, ["band", "band_sig"])
         .where(F.col("delta_doc") != F.col("corpus_doc"))

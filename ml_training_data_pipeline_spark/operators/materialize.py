@@ -1,12 +1,14 @@
-"""Materialization-strategy knob for multi-consumer intermediates.
+"""The two seams for shared work: ``materialize()`` and ``overlap()``.
 
-Several operators materialize a shared intermediate exactly once so the
-plan doesn't re-run an expensive upstream lineage per consumer (the
-doc-term counts under tf-idf, the shingle table under MinHash, the
-window position stream under the span scrub, the per-round label table
-of connected components). The single-JVM form is ``localCheckpoint()``;
-SURVEY §4 notes the 100 TB form is a persist-to-disk of the same table.
-This helper makes that a DEPLOYMENT knob instead of an operator edit:
+Every shared intermediate in the package goes through ``materialize()``:
+the doc-term counts under tf-idf, the shingle table under MinHash, the
+window position stream under the span scrub, refine's per-round labels,
+the per-round label table of connected components, and every other
+frame read by more than one consumer. Nothing else in the package calls
+``localCheckpoint()`` or ``checkpoint()``. The single-JVM form is
+``localCheckpoint()``; SURVEY §4 notes the 100 TB form is a
+persist-to-disk of the same table. The strategy is a DEPLOYMENT knob,
+not an operator edit:
 
     SPARK_GRAFT_MATERIALIZE=local     (default) localCheckpoint(eager=True)
     SPARK_GRAFT_MATERIALIZE=reliable  df.checkpoint(eager=True) to
@@ -35,8 +37,8 @@ Rejected: ``persist(StorageLevel.DISK_ONLY)``. Persist routes through the
 CacheManager, which normalizes and stringifies the logical plan for cache
 lookup — on this engine's deeply nested higher-order-function plans
 (tokenize inside n-gram lambdas, the d25 cascade) that plan-tree walk
-OOM'd a 1 GiB driver before any data moved (observed r15:
-``java.lang.OutOfMemoryError`` inside ``TreeNode.generateTreeString`` off
+OOM'd a 1 GiB driver before any data moved
+(``java.lang.OutOfMemoryError`` inside ``TreeNode.generateTreeString`` off
 ``o.persist``). Reliable checkpoint gives the same executor-loss
 durability through the RDD layer without ever handing the plan to the
 CacheManager.
@@ -45,6 +47,14 @@ All three strategies are EAGER — callers rely on the intermediate
 existing before fan-out, and the iterative operators (connected
 components) rely on per-round lineage truncation, which every strategy
 preserves.
+
+Independent Spark jobs submitted from one driver go through
+``overlap()``: it runs each thunk on its own driver thread, so one job's
+tasks fill the executor slots another leaves idle instead of waiting for
+it to finish, and the threads inherit the caller's job group and local
+properties, so every stage stays attributable to the query that caused
+it. It is the only place the package starts driver threads for Spark
+work.
 """
 
 from __future__ import annotations
@@ -53,15 +63,16 @@ import atexit
 import os
 import shutil
 import uuid
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _VALID = ("local", "reliable", "parquet")
 
 # parquet-strategy dirs created by THIS process, removed best-effort at
 # interpreter exit: without this a sweep or long deployment accumulates
 # one uuid dir per materialize() call (connected components: one per
-# pointer-doubling round) until the disk fills (round-15 review finding).
+# pointer-doubling round) until the disk fills.
 # The read-back DataFrame is only valid while this process's session
 # lives, so exit-time removal is safe. A long-lived cluster deployment
 # should point SPARK_GRAFT_MATERIALIZE_DIR at storage with a lifecycle/
@@ -93,9 +104,7 @@ def _strategy() -> str:
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` once and return the frame downstream
     consumers should read. Strategy per SPARK_GRAFT_MATERIALIZE (module
-    docstring); the default (``local``) is byte-identical to the
-    ``localCheckpoint(eager=True)`` the operators previously hard-coded,
-    so the plan ledger is unchanged unless the knob is set."""
+    docstring); the default (``local``) is ``localCheckpoint(eager=True)``."""
     s = _strategy()
     if s == "local":
         return df.localCheckpoint(eager=True)
@@ -106,7 +115,6 @@ def materialize(df: DataFrame) -> DataFrame:
         if want:
             # an EXPLICIT dir always wins — silently keeping a stale
             # pre-set dir would drop the dfs durability the knob promises
-            # (round-15 review finding)
             if cur.isEmpty() or cur.get() != want:
                 sc.setCheckpointDir(want)
         elif cur.isEmpty():
@@ -119,3 +127,26 @@ def materialize(df: DataFrame) -> DataFrame:
     df.write.mode("overwrite").parquet(path)
     _PARQUET_DIRS.append(path)
     return df.sparkSession.read.parquet(path)
+
+
+def overlap(*thunks: Callable[[], Any], max_workers: int | None = None) -> list:
+    """Run ``thunks`` concurrently on driver threads and return their
+    results in argument order.
+
+    Each thunk runs on a ``ThreadPoolExecutor`` worker wrapped by
+    ``pyspark.inheritable_thread_target``, so its jobs carry the
+    caller's job group and local properties (one wrap per thunk: the
+    wrapper copies the caller's properties, and a shared copy would let
+    one thread's job-group change leak into the others). The call
+    returns only after every thunk has finished, so no Spark job
+    outlives it. If any thunk raises, the first failure in argument
+    order is re-raised with its own traceback once all have finished.
+    ``max_workers`` defaults to one thread per thunk."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=max_workers or max(len(thunks), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import ngrams_up_to, remove_stopwords, tokenize
+from .materialize import materialize
 
 
 def _token_array(
@@ -123,8 +124,6 @@ def tfidf_long(
     # persist-to-disk of the doc-term table — selected via
     # SPARK_GRAFT_MATERIALIZE (operators/materialize.py); the default is
     # the single-JVM localCheckpoint form.
-    from .materialize import materialize
-
     counts = materialize(term_counts(tokens))
     n_docs = corpus_size(docs, text_col, stopwords=stopwords)
     # df(t) via groupBy + join, not a window over term: the groupBy gets

@@ -112,7 +112,7 @@ def span_scrub_ctes(width: int = SPAN_WIDTH) -> str:
     rc AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id)"""
 
 
-def materialize(sql: str, *cte_names: str) -> str:
+def materialize_ctes(sql: str, *cte_names: str) -> str:
     """Rewrite ``name AS (`` → ``name AS MATERIALIZED (`` for the given
     CTE names (word-boundary match, all occurrences).
 

@@ -48,17 +48,6 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
         )
-        # refine's oversized-candidate LDA fits are submitted from
-        # concurrent driver threads (operators/refine.py); FAIR mode lets
-        # those jobs share executors instead of queueing FIFO.
-        # (A session-2 scheduler bisection briefly blamed FAIR for a
-        # 3-20x CPU inflation on shuffle-heavy sf1 queries; a controlled
-        # re-run reproduced the same inflation under FIFO at 8.9% steal —
-        # the variable was intermittent HOST-level contention episodes on
-        # the virtualized runner, which bench.py's steal_pct now flags,
-        # not the scheduler. Scheduler env knob intentionally NOT added:
-        # an unsupported config fork would outlive the evidence.)
-        .config("spark.scheduler.mode", "FAIR")
         # testdata parquet carries TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as long and convert at the source (io/sources.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

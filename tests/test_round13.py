@@ -102,11 +102,12 @@ HEADLINE_PLAN_SHAPE = {
     "v1_tfidf_ngram": (1, 1, 0, 0),
     "v4_vocab_top2000": (2, 0, 0, 1),
     "c1_cluster_term_scores": (3, 2, 0, 1),
-    # d4 changed in round 16: the LSH candidate-pair list is materialized
-    # once (operators/dedup.minhash_dedup), so the three downstream plan
-    # references no longer re-derive the minhash→bands→self-join subtree
-    # (was (28, 12, 0, 0); checkpointed index/pairs: scans upstream)
-    "d4_minhash_dedup": (10, 3, 0, 0),
+    # d4: minhash_dedup materializes the LSH candidate-pair list once and
+    # jaccard_pairs materializes its candidate-scoped shingles, so the
+    # downstream references read checkpoints instead of re-deriving the
+    # minhash→bands→self-join subtree (its scans sit in the
+    # pre-checkpoint segments; see PLANS_r18.json)
+    "d4_minhash_dedup": (4, 3, 0, 0),
     "n1_ann_brute_topk": (1, 1, 1, 2),  # the bnlj is the broadcast probe batch
     "w2_sessionization": (1, 0, 0, 1),
     "x2_quality_scores": (0, 0, 0, 1),

@@ -232,6 +232,37 @@ def test_materialize_strategies_preserve_results(
     assert pdf["tokens_kept"].tolist() == [16, 6]
 
 
+def _value_hash(pdf) -> str:
+    """Order-insensitive hash of a result's values (columns sorted by
+    name, rows by their string form)."""
+    import hashlib
+
+    cols = sorted(pdf.columns)
+    rows = sorted(repr(tuple(r)) for r in pdf[cols].itertuples(index=False))
+    return hashlib.sha256("\n".join([repr(cols), *rows]).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("strategy", ["reliable", "parquet"])
+@pytest.mark.parametrize("name", ["d4_minhash_dedup", "m11_lloyd_elbow_exact"])
+def test_materialize_strategies_preserve_oracle_query_hashes(
+    spark, tmp_path_factory, monkeypatch, name, strategy
+):
+    """Two oracle-backed queries whose shared intermediates all go
+    through materialize(): the value hash under each strategy equals the
+    hash under the default ``local`` strategy."""
+    run = entry_mod.queries()[name]
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
+    want = _value_hash(run(spark, SF_DIR).toPandas())
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", strategy)
+    monkeypatch.setenv(
+        "SPARK_GRAFT_MATERIALIZE_DIR", str(tmp_path_factory.mktemp("matdir"))
+    )
+    monkeypatch.setenv(
+        "SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path_factory.mktemp("ckptdir"))
+    )
+    assert _value_hash(run(spark, SF_DIR).toPandas()) == want
+
+
 # --- CkptRecorder reentry guard (r14 ADVICE) ---------------------------------------
 
 
@@ -423,14 +454,14 @@ def test_cur14_fully_contaminated_source_yields_null_rate(spark, tmp_path_factor
 
 
 def test_materialize_rewrites_word_boundary_cte_names_only():
-    """materialize() must hit exactly the named CTEs: 'sh AS (' inside
+    """materialize_ctes() must hit exactly the named CTEs: 'sh AS (' inside
     another identifier (e.g. 'hash AS (') or a non-requested CTE must
     stay untouched, and every occurrence of a requested name is
     rewritten (d20 defines cand_1 once but the helper is re-entrant)."""
-    from ml_training_data_pipeline_spark.plans.oracle_fragments import materialize
+    from ml_training_data_pipeline_spark.plans.oracle_fragments import materialize_ctes
 
     sql = "WITH hash AS (SELECT 1), sh AS (SELECT 2), stats_1 AS (SELECT 3) SELECT 4"
-    out = materialize(sql, "sh")
+    out = materialize_ctes(sql, "sh")
     assert "sh AS MATERIALIZED (" in out
     assert "hash AS (" in out  # suffix-collision guard
     assert "stats_1 AS (" in out  # non-requested CTE untouched
@@ -518,7 +549,7 @@ def test_sf1_rowsonly_artifacts_are_clean():
 
 def test_no_guarded_oracle_leaves_a_heavy_cte_inlined():
     """The real invariant behind the materialize pins: in every oracle
-    that went through materialize() (d20/d21 inline + the 8-name guard),
+    that went through materialize_ctes() (d20/d21 inline + the 8-name guard),
     NO heavy shared fragment may remain in plain inlined form — a
     formatting drift in a fragment that stops the rewrite matching
     would silently bring back the measured >80 GB sf1 temp spill. The
