@@ -42,9 +42,8 @@ def fit_kmeans(
     # transform (guide §5: reuse + expensive recompute). Without this,
     # MLlib caches its internal instances RDD for the Lloyd iterations
     # but model.transform() re-executes the whole upstream plan (scan →
-    # vectorize — at 100 TB a second full corpus pass; measured r16 at
-    # sf0.1: m2 re-paid the scan+exchange twice). MLlib skips its own
-    # duplicate caching when the input's storageLevel is already set.
+    # vectorize — at 100 TB a second full corpus pass). MLlib skips its
+    # own duplicate caching when the input's storageLevel is already set.
     from pyspark import StorageLevel
 
     features = features.persist(StorageLevel.MEMORY_AND_DISK)
@@ -142,7 +141,7 @@ def scatter_row_num(q_col: str, s_col: str, n_col: str):
     n >~ 10^16 at |q|~10^3), but its SQUARE is quadratic in n — at
     |q|~600 / 64 dims the fold exceeds Long.MAX once a cluster holds
     ~3e5 members and ANSI Spark throws where DuckDB's HUGEINT stays
-    exact (r15 ADVICE). So: diff in long, square and accumulate in
+    exact. So: diff in long, square and accumulate in
     decimal(38,0) — exact integer digits either way, overflow pushed to
     ~10^38."""
     return F.aggregate(
@@ -164,32 +163,33 @@ def quantize_vectors(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The (vec_id, q, d) quantized-corpus frame the Lloyd determinism
-    recipe runs on, materialized ONCE — the third return slot of
-    ``lloyd_quantized`` and the ``prequantized`` input a k-sweep (m11)
-    shares across every k (and across concurrently-submitted fits)."""
+    recipe runs on — the third return slot of ``lloyd_quantized``,
+    materialized once because every iteration's assign and sums pass, for
+    every k of a sweep, reads it."""
     q = vectors.select(
         F.col(id_col).alias("vec_id"),
         F.transform(
             F.col(vec_col), lambda x: F.floor(x.cast("double") * quant)
         ).alias("q"),
     ).withColumn("d", F.transform("q", lambda x: x.cast("double")))
-    return materialize(q)  # consumed by every iteration's assign + sums pass
+    return materialize(q)
 
 
 def lloyd_quantized(
     vectors: DataFrame,
-    k: int,
+    ks: "tuple[int, ...]",
     iters: int,
     quant: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prequantized: "DataFrame | None" = None,
-) -> "tuple[DataFrame, dict[int, list[float]], DataFrame]":
-    """Lloyd's k-means under a cross-engine determinism recipe (M10/N23).
+) -> "tuple[DataFrame, dict[int, dict[int, list[float]]], DataFrame]":
+    """Lloyd's k-means under a cross-engine determinism recipe (M10/M11/N23),
+    fit for every k in ``ks`` at once.
 
     Returns ``(assignments, final_centers, quantized_frame)`` — the
-    assignment frame carries (vec_id, q, d, cluster_id); centers are the
-    k x dims doubles iteration ``iters`` was computed against.
+    assignment frame carries (vec_id, q, d, k, cluster_id), one row per
+    vector per k; ``final_centers[k][cluster_id]`` are the dims doubles
+    iteration ``iters`` was computed against.
 
     Unlike ``fit_kmeans`` (Spark ML: parallel init, partition-order-
     sensitive float reductions — only rows-only checkable), this variant
@@ -207,38 +207,36 @@ def lloyd_quantized(
     - argmin ties break on cluster_id; an emptied cluster keeps its
       previous center.
 
-    Init: the ``k`` lowest ``id_col`` rows. Scale shape: one scan per
-    iteration, centers ship as k x d literals (broadcast-equivalent),
-    per-cluster sums are map-side-combinable longs; driver transfer is
-    k rows per iteration (job control).
-
-    ``prequantized``: a (vec_id, q, d) frame from a prior call's third
-    return slot — a k-sweep (m11) quantizes/materializes the corpus ONCE
-    and shares it across every k, matching the oracle's one shared qd/qe
-    input shape (r15 ADVICE); when given, ``vectors`` is ignored.
+    Init: each k takes the k lowest ``id_col`` rows, i.e. the first k of
+    one ``max(ks)``-row collect. Scale shape, for the whole sweep: one
+    scan per iteration that assigns every k, centers ship as literals
+    (broadcast-equivalent), per-(k, cluster) sums are map-side-combinable
+    longs; driver transfer is sum(ks) rows per iteration (job control).
+    The k fits are independent, so sharing the passes cannot change any
+    k's answer.
     """
-    if prequantized is not None:
-        q = prequantized
-    else:
-        q = quantize_vectors(vectors, quant, id_col, vec_col)
-
     if iters < 1:
         raise ValueError(f"lloyd_deterministic: iters={iters}, need >= 1")
-    init = q.orderBy("vec_id").limit(k).select("d").collect()
-    if len(init) < k:
-        raise ValueError(f"lloyd_deterministic: k={k} but only {len(init)} rows")
-    centers: dict[int, list[float]] = {j: list(r["d"]) for j, r in enumerate(init)}
-    dims = len(centers[0])
+    q = quantize_vectors(vectors, quant, id_col, vec_col)
+    k_max = max(ks)
+    init = [r["d"] for r in q.orderBy("vec_id").limit(k_max).select("d").collect()]
+    if len(init) < k_max:
+        raise ValueError(f"lloyd_deterministic: k={k_max} but only {len(init)} rows")
+    centers = {k: {j: list(init[j]) for j in range(k)} for k in ks}
+    dims = len(init[0])
 
-    assign = None
     for t in range(1, iters + 1):
-        structs = center_dist_structs("d", centers)
-        assign = q.select(
-            "vec_id", "q", "d", F.array_min(structs)["cluster_id"].alias("cluster_id")
-        )
+        per_k = [
+            F.struct(
+                F.lit(k).alias("k"),
+                F.array_min(center_dist_structs("d", centers[k]))["cluster_id"].alias("cluster_id"),
+            )
+            for k in ks
+        ]
+        assign = q.select("vec_id", "q", "d", F.inline(F.array(*per_k)))
         if t < iters:
             rows = (
-                assign.groupBy("cluster_id")
+                assign.groupBy("k", "cluster_id")
                 .agg(
                     F.count("*").alias("n"),
                     *[
@@ -246,15 +244,10 @@ def lloyd_quantized(
                         for i in range(dims)
                     ],
                 )
-                .collect()  # k rows x d sums — job control, not data movement
+                .collect()  # sum(ks) rows x d sums — job control, not data movement
             )
-            centers = {
-                **centers,
-                **{
-                    r["cluster_id"]: [r[f"s{i}"] / r["n"] for i in range(dims)]
-                    for r in rows
-                },
-            }
+            for r in rows:
+                centers[r["k"]][r["cluster_id"]] = [r[f"s{i}"] / r["n"] for i in range(dims)]
     return assign, centers, q
 
 
@@ -269,5 +262,5 @@ def lloyd_deterministic(
     """The M10 assignment table — see ``lloyd_quantized`` for the full
     (assignments, final centers, quantized frame) return that IVF-style
     consumers (n23) build on."""
-    assign, _, _ = lloyd_quantized(vectors, k, iters, quant, id_col, vec_col)
+    assign, _, _ = lloyd_quantized(vectors, (k,), iters, quant, id_col, vec_col)
     return assign.select("vec_id", "cluster_id")

@@ -690,8 +690,9 @@ def m10_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- M11: Lloyd elbow with EXACT integer inertia (oracle-backed) -------------
 # m7's elbow rides Spark ML k-means (rows-only by design); m11 makes the
 # model-selection sweep itself oracle-checkable. For k in (2, 4, 8) it runs
-# the deterministic Lloyd trainer (2 iterations, shared quantized corpus)
-# and reports per-cluster within-cluster scatter as an EXACT INTEGER:
+# the deterministic Lloyd trainer (2 iterations, every k fit in the same
+# passes over one quantized corpus) and reports per-cluster within-cluster
+# scatter as an EXACT INTEGER:
 #   inertia_num(c) = sum over members of sum_dims (q_i * n_c - s_c,i)^2
 # i.e. the within-SS about the cluster's own mean, scaled by n_c^2 — all
 # integer arithmetic (q quantized long, s exact long sums), so there is NO
@@ -699,10 +700,11 @@ def m10_lloyd_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Spark sums in decimal(38,0), DuckDB in HUGEINT; both print plain
 # digits). True WSS = inertia_num / n_members^2 in quantized units — the
 # downstream elbow analysis divides AFTER the engines are compared.
-# Scale shape: per k, one assign pass + one combinable sums aggregate
-# (k x dims longs to the driver, job control) + one broadcast join back
-# for the scatter fold — 3 x ITERS linear passes, no shuffle beyond the
-# k-group aggregates.
+# Scale shape for the whole sweep: each pass over the quantized corpus
+# assigns every k at once — ITERS - 1 per-(k, cluster) sums collects, then
+# the final assignment read twice (its sums, and the scatter fold against
+# those sums broadcast back) — ITERS + 1 linear passes, no shuffle beyond
+# the (k, cluster)-group aggregates.
 _M11_KS = (2, 4, 8)
 _M11_ITERS = 2
 
@@ -746,65 +748,41 @@ def _m11_oracle() -> str:
 
 @query("m11_lloyd_elbow_exact", oracle=_m11_oracle())
 def m11_lloyd_elbow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import partial
-
-    from ..operators.cluster import lloyd_quantized, quantize_vectors
+    from ..operators.cluster import lloyd_quantized, scatter_row_num
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # quantize + materialize the corpus ONCE and share it across the
-    # k-sweep — matches the oracle's single shared qd/qe input
-    # (emit_input=False per k), one corpus scan instead of three
-    qframe = quantize_vectors(emb, quant=_LLOYD_Q)
-
-    def fit_one(k: int) -> DataFrame:
-        """One k's fit + exact-integer inertia frame. Each fit is a chain
-        of per-iteration k-row collects that only READS the shared
-        quantized checkpoint and is deterministic given (q, k), so the
-        fits are independent and the overlapped sweep returns the same
-        rows as a serial one; what overlaps is the driver-side job
-        latency of the chains."""
-        assign, centers, _ = lloyd_quantized(
-            emb, k=k, iters=_M11_ITERS, quant=_LLOYD_Q, prequantized=qframe
+    assign, centers, _ = lloyd_quantized(emb, _M11_KS, _M11_ITERS, quant=_LLOYD_Q)
+    dims = len(centers[_M11_KS[0]][0])
+    sums = (
+        assign.groupBy("k", "cluster_id")
+        .agg(
+            F.count("*").alias("n"),
+            *[F.sum(F.element_at("q", i + 1)).alias(f"s{i}") for i in range(dims)],
         )
-        dims = len(centers[0])
-        sums = (
-            assign.groupBy("cluster_id")
-            .agg(
-                F.count("*").alias("n"),
-                *[F.sum(F.element_at("q", i + 1)).alias(f"s{i}") for i in range(dims)],
-            )
-            .select(
-                "cluster_id",
-                "n",
-                F.array(*[F.col(f"s{i}") for i in range(dims)]).alias("s"),
-            )
-        )
-        # decimal-accumulated scatter fold — see scatter_row_num for the
-        # overflow bound (a long fold throws under ANSI once a cluster
-        # holds ~3e5 members)
-        from ..operators.cluster import scatter_row_num
-
-        per_row = assign.join(F.broadcast(sums), "cluster_id").select(
+        .select(
+            "k",
             "cluster_id",
             "n",
-            scatter_row_num("q", "s", "n").alias("row_num"),
+            F.array(*[F.col(f"s{i}") for i in range(dims)]).alias("s"),
         )
-        inertia = per_row.groupBy("cluster_id", "n").agg(
-            F.sum(F.col("row_num").cast("decimal(38,0)"))
-            .cast("string")  # exact digits; see the oracle's VARCHAR note
-            .alias("inertia_num")
-        )
-        # materialize inside the thunk so every fit's jobs (including
-        # the inertia aggregation) overlap; the frame is k rows
-        return materialize(inertia.select(
-            F.lit(k).cast("long").alias("k"),
-            "cluster_id",
-            F.col("n").cast("long").alias("n_members"),
-            "inertia_num",
-        ))
-
-    parts = overlap(*(partial(fit_one, k) for k in _M11_KS))
-    out = parts[0]
-    for res in parts[1:]:
-        out = out.unionAll(res)
-    return out
+    )
+    # decimal-accumulated scatter fold — see scatter_row_num for the
+    # overflow bound (a long fold throws under ANSI once a cluster holds
+    # ~3e5 members)
+    per_row = assign.join(F.broadcast(sums), ["k", "cluster_id"]).select(
+        "k",
+        "cluster_id",
+        "n",
+        scatter_row_num("q", "s", "n").alias("row_num"),
+    )
+    inertia = per_row.groupBy("k", "cluster_id", "n").agg(
+        F.sum(F.col("row_num").cast("decimal(38,0)"))
+        .cast("string")  # exact digits; see the oracle's VARCHAR note
+        .alias("inertia_num")
+    )
+    return inertia.select(
+        F.col("k").cast("long").alias("k"),
+        "cluster_id",
+        F.col("n").cast("long").alias("n_members"),
+        "inertia_num",
+    )

@@ -1900,14 +1900,14 @@ def n23_deterministic_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.cluster import center_dist_structs, lloyd_quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assign, centers, q = lloyd_quantized(emb, k=_N23_K, iters=_N23_ITERS, quant=_N23_Q)
+    assign, centers, q = lloyd_quantized(emb, (_N23_K,), _N23_ITERS, quant=_N23_Q)
 
     queries = q.where(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("d").alias("qd")
     )
     # the trainer's own struct machinery — the recipe's IEEE fold stays
     # single-sourced in operators/cluster.py
-    cell_structs = center_dist_structs("qd", centers)
+    cell_structs = center_dist_structs("qd", centers[_N23_K])
     probe = (
         queries.select(
             "query_id",

@@ -54,7 +54,8 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 ok = (math.isnan(x) and math.isnan(y)) or x == y or abs(x - y) < 1e-9
                 assert ok, f"{name}.{c}[{i}]: {x!r} != {y!r}"
         else:
-            mismatch = a[c].astype(object).fillna("\0NULL") != b[c].astype(object).fillna("\0NULL")
+            # where(), not fillna(): no object-dtype downcast on either side
+            mismatch = a[c].where(a[c].notna(), "\0NULL") != b[c].where(b[c].notna(), "\0NULL")
             assert not mismatch.any(), (
                 f"{name}.{c}: {int(mismatch.sum())} mismatches, first at idx "
                 f"{mismatch.idxmax()}: {a[c][mismatch].iloc[0]!r} != {b[c][mismatch].iloc[0]!r}"

@@ -199,7 +199,8 @@ def test_cur17_always_emits_all_three_configs(spark):
 
 
 def test_refine_end_to_end_parity_across_partitionings(spark):
-    """m5/m6/m11 are rows-only 🔶; §5's determinism-under-reconfiguration
+    """m5/m6 are rows-only 🔶 (m11, the Lloyd elbow, is oracle-backed);
+    §5's determinism-under-reconfiguration
     discipline (same answer at shuffle partitions 3 and 32) applied to
     the full iterative composite: split → renumber → merge → renumber
     must produce IDENTICAL assignments regardless of physical layout."""

@@ -10,7 +10,10 @@ import math
 
 import pytest
 
-from ml_training_data_pipeline_spark.operators.cluster import lloyd_deterministic
+from ml_training_data_pipeline_spark.operators.cluster import (
+    lloyd_deterministic,
+    lloyd_quantized,
+)
 
 
 def _mk_vectors(spark, rows):
@@ -18,6 +21,15 @@ def _mk_vectors(spark, rows):
         [(i, [float(x) for x in v]) for i, v in rows],
         schema="vec_id bigint, embedding array<float>",
     )
+
+
+def _multi_k_assignments(spark, rows, ks, iters):
+    """{k: {vec_id: cluster_id}} from ONE lloyd_quantized call over ks."""
+    assign, _, _ = lloyd_quantized(_mk_vectors(spark, rows), ks, iters)
+    got = {k: {} for k in ks}
+    for r in assign.select("k", "vec_id", "cluster_id").collect():
+        got[r["k"]][r["vec_id"]] = r["cluster_id"]
+    return got
 
 
 def _reference_lloyd(rows, k, iters, quant=1000):
@@ -75,6 +87,10 @@ def test_lloyd_matches_pure_python_mirror(spark):
     )
     want = _reference_lloyd(rows, k=4, iters=3)
     assert got == want
+    # the same trainer fitting several k in one pass matches each k's mirror
+    multi = _multi_k_assignments(spark, rows, (2, 3, 4), iters=3)
+    for k in (2, 3, 4):
+        assert multi[k] == _reference_lloyd(rows, k=k, iters=3), k
 
 
 def test_lloyd_recovers_planted_blobs(spark):
@@ -110,12 +126,21 @@ def test_lloyd_empty_cluster_keeps_previous_center(spark):
     assert got[0] == got[1] == 1  # re-captured by the kept center
     assert got[4] == 0
     assert got[2] == got[3] == 2
+    # k=3's emptied cluster keeps its center while k=2 updates beside it
+    multi = _multi_k_assignments(spark, rows, (2, 3), iters=3)
+    for k in (2, 3):
+        assert multi[k] == _reference_lloyd(rows, k=k, iters=3), k
+    assert multi[3] == got
 
 
 def test_lloyd_raises_when_fewer_rows_than_k(spark):
     rows = [(0, [1.0]), (1, [2.0])]
     with pytest.raises(ValueError, match="k=5"):
         lloyd_deterministic(_mk_vectors(spark, rows), k=5, iters=1)
+    # a sweep is refused when its largest k exceeds the rows, even though
+    # its smaller k would fit
+    with pytest.raises(ValueError, match="k=3"):
+        lloyd_quantized(_mk_vectors(spark, rows), (2, 3), iters=1)
 
 
 # --- bench.py steal-time visibility ------------------------------------------

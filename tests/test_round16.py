@@ -122,24 +122,38 @@ def test_scatter_fold_survives_long_overflow(spark):
     assert int(row["x"]) == 2 * (600 * 10_000_000) ** 2  # 7.2e19 exact
 
 
-def test_m11_shares_one_quantized_corpus(spark):
-    # r15 ADVICE (low): the k-sweep must quantize/materialize the corpus
-    # once (the oracle's emit_input=False shape), not once per k — pin
-    # via lloyd_quantized's prequantized fast path identity
-    from pyspark.sql import functions as F
+def test_m11_quantizes_once_and_multi_k_fit_matches_single_k(spark, monkeypatch):
+    # the k-sweep quantizes/materializes the corpus once (the oracle's one
+    # shared qd/qe input), not once per k
+    from ml_training_data_pipeline_spark.operators import cluster
+    from ml_training_data_pipeline_spark.plans import registry
+    import ml_training_data_pipeline_spark.plans.queries_ml  # noqa: F401
+    from tests.conftest import SF_DIR
 
-    from ml_training_data_pipeline_spark.operators.cluster import lloyd_quantized
+    calls = []
+    real = cluster.quantize_vectors
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a1, _, q1 = lloyd_quantized(emb, k=2, iters=1, quant=1000)
-    a2, _, q2 = lloyd_quantized(emb, k=4, iters=1, quant=1000, prequantized=q1)
-    assert q2 is q1  # no re-quantize, no second materialization
-    # and the shared-input path computes the same assignments as a fresh
-    # quantization would
-    a2b, _, _ = lloyd_quantized(emb, k=4, iters=1, quant=1000)
-    left = {r["vec_id"]: r["cluster_id"] for r in a2.select("vec_id", "cluster_id").collect()}
-    right = {r["vec_id"]: r["cluster_id"] for r in a2b.select("vec_id", "cluster_id").collect()}
-    assert left == right
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cluster, "quantize_vectors", counting)
+    registry.QUERIES["m11_lloyd_elbow_exact"](spark, SF_DIR).collect()
+    assert len(calls) == 1
+    monkeypatch.undo()
+
+    # and fitting several k in one call gives each k the assignments its
+    # own single-k fit gives
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    multi, _, _ = cluster.lloyd_quantized(emb, (2, 4), iters=2, quant=1000)
+    for k in (2, 4):
+        single, _, _ = cluster.lloyd_quantized(emb, (k,), iters=2, quant=1000)
+        left = {
+            r["vec_id"]: r["cluster_id"]
+            for r in multi.where(f"k = {k}").select("vec_id", "cluster_id").collect()
+        }
+        right = {r["vec_id"]: r["cluster_id"] for r in single.select("vec_id", "cluster_id").collect()}
+        assert left and left == right, k
 
 
 # --- cur2/cur11 survivor argmax unified with d25's combinable struct ---------
