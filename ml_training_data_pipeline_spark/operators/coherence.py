@@ -16,7 +16,9 @@ term-pair statistics are plain aggregates over the long-format binary DFM
 Scale shape: the top-M term set is tiny (clusters × M rows ⇒ broadcast);
 the binary DFM self-join is restricted to those terms *before* joining on
 doc — the posting lists involved are M·clusters long, so the shuffle is
-bounded regardless of corpus size.
+bounded regardless of corpus size. The ranked top-M frame is read six
+times, so it arrives as a checkpoint (``refine.cluster_coherence`` makes
+it): a lazy ranking re-runs its aggregation and window for every read.
 """
 
 from __future__ import annotations
@@ -53,7 +55,9 @@ def prob_coherence(
 
     topic_terms: (cluster_id, term, rank) — each cluster's top-M ranked
     terms (rank 1 = strongest). Returns (cluster_id, coherence) with
-    coherence = avg over rank-ordered pairs, rounded 6.
+    coherence = avg over rank-ordered pairs, rounded 6. ``topic_terms`` is
+    read six times (both pair sides; ``needed`` in the x, y and two df_t
+    reads of ``bsub``), so callers pass a materialized frame.
     """
     tt = topic_terms.select("cluster_id", "term", "rank")
     # rank-ordered pairs within each cluster's topic

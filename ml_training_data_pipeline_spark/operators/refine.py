@@ -89,10 +89,11 @@ def cluster_coherence(
     """A5 — per-cluster mean probabilistic coherence over the cluster's
     top-M terms (02_build_models.R:346-348,837-838).
     Returns (cluster_id, coherence). Pass a cached ``binary`` when calling
-    in a loop — rebuilding it re-runs the whole tokenize lineage."""
-    topterms = cluster_term_scores(tfidf, assignments, top_n=top_m).select(
-        "cluster_id", "term", "rank"
-    )
+    in a loop — rebuilding it re-runs the whole tokenize lineage. The
+    ranking is checkpointed: ``prob_coherence`` reads it six times, and a
+    lazy one re-runs its join, sum and top-M window as new jobs per read."""
+    topterms = materialize(cluster_term_scores(tfidf, assignments, top_n=top_m)
+                           .select("cluster_id", "term", "rank"))
     if binary is None:
         # the long DFM is unique per (doc_id, term) by construction
         # (term_counts groups on that key) — skip the distinct shuffle
@@ -325,146 +326,146 @@ def split_low_coherence_clusters(
         binary = binary_doc_term(
             tfidf.select("doc_id", "term"), assume_unique=True
         ).cache()
-    coh = (
-        coherence
-        if coherence is not None
-        else cluster_coherence(tfidf, assignments, n_docs, cfg.top_m, binary=binary)
-    )
-    sizes = assignments.groupBy("cluster_id").agg(F.count("*").alias("size"))
-    # cluster-count-sized collect (documented exception): the candidate
-    # list drives job structure, not data movement. ONE collect of the
-    # k-row (cluster, size, coherence) frame yields both the candidate
-    # list and max_id — the old separate assignments.agg(max) job was a
-    # second full pass over the assignment table per split round. LEFT
-    # join from sizes: a cluster with a single top term produces no
-    # coherence pair (hence no coh row) and is correctly no candidate,
-    # but its id must still bound the minted-id block.
-    all_rows = sizes.join(coh, "cluster_id", "left").collect()
-    max_id = max(int(r["cluster_id"]) for r in all_rows)
-    cands = sorted(
-        (
-            (float(r["coherence"]), int(r["cluster_id"]), int(r["size"]))
-            for r in all_rows
-            if r["coherence"] is not None
-            and r["coherence"] < cfg.coherence_threshold
-            and r["size"] >= cfg.min_docs
-        ),
-    )
-    if cfg.max_split_clusters is not None:
-        cands = cands[: cfg.max_split_clusters]
-    cand_sizes = {c: s for _, c, s in cands}
-    if not cand_sizes:
+    try:
+        coh = (
+            coherence
+            if coherence is not None
+            else cluster_coherence(tfidf, assignments, n_docs, cfg.top_m, binary=binary)
+        )
+        sizes = assignments.groupBy("cluster_id").agg(F.count("*").alias("size"))
+        # cluster-count-sized collect (documented exception): the candidate
+        # list drives job structure, not data movement. ONE collect of the
+        # k-row (cluster, size, coherence) frame yields both the candidate
+        # list and max_id — the old separate assignments.agg(max) job was a
+        # second full pass over the assignment table per split round. LEFT
+        # join from sizes: a cluster with a single top term produces no
+        # coherence pair (hence no coh row) and is correctly no candidate,
+        # but its id must still bound the minted-id block.
+        all_rows = sizes.join(coh, "cluster_id", "left").collect()
+        max_id = max(int(r["cluster_id"]) for r in all_rows)
+        cands = sorted(
+            (
+                (float(r["coherence"]), int(r["cluster_id"]), int(r["size"]))
+                for r in all_rows
+                if r["coherence"] is not None
+                and r["coherence"] < cfg.coherence_threshold
+                and r["size"] >= cfg.min_docs
+            ),
+        )
+        if cfg.max_split_clusters is not None:
+            cands = cands[: cfg.max_split_clusters]
+        cand_sizes = {c: s for _, c, s in cands}
+        if not cand_sizes:
+            return assignments, []
+        assignments = assignments.select(
+            "doc_id", F.col("cluster_id").cast("long").alias("cluster_id")
+        )
+        max_k = max(cfg.k_range)
+        small = sorted(c for c, s in cand_sizes.items() if s <= cfg.local_fit_max_docs)
+        big = sorted(c for c in cand_sizes if c not in set(small))
+        out = assignments
+
+        if small:
+            # deterministic non-overlapping id blocks: candidate i gets
+            # [max_id + 1 + i*max_k, ... + max_k) — renumber compacts later.
+            bases = assignments.sparkSession.createDataFrame(
+                [(c, max_id + 1 + i * max_k) for i, c in enumerate(small)],
+                schema="cluster_id long, base_id long",
+            )
+            member_counts = (
+                tfidf.select("doc_id", "term", "tf")
+                .join(assignments, "doc_id")
+                .join(F.broadcast(bases), "cluster_id")
+            )
+            grouped = member_counts.groupBy("cluster_id").applyInPandas(
+                _make_group_splitter(cfg), schema="doc_id long, cluster_id long"
+            )
+            # materialize ONCE (guide §5): grouped feeds both the anti-join and
+            # the union leg below. Left lazy, each consumer re-executes the
+            # whole FlatMapGroupsInPandas — i.e. every candidate's probe +
+            # final LDA fit ran TWICE per split round (ReuseExchange only
+            # dedupes the shuffle BELOW the Python node, not the node itself).
+            grouped = materialize(grouped)
+            out = out.join(grouped.select("doc_id"), "doc_id", "left_anti").unionByName(grouped)
+
+        def fit_big_candidate(cid: int, base_id: int) -> DataFrame | None:
+            """Probe + final MLlib LDA for ONE oversized candidate. A fit reads
+            only its own cluster's members and writes only its own id block,
+            so the candidates are independent and overlap instead of
+            serializing on the driver (the reference's loop is serial,
+            02_build_models.R:487-564 — at 100× many >local_fit_max_docs
+            low-coherence clusters would make that the refine wall-clock)."""
+            members = assignments.where(F.col("cluster_id") == cid).select("doc_id")
+            sub = tf_vectors.join(members, "doc_id").cache()
+            try:
+                n_sub = sub.count()
+                if n_sub < cfg.min_docs:
+                    return None
+                ks = [k for k in cfg.k_range if k < n_sub]
+                # cluster-local probe scoring: D(w)/N from the cluster's own
+                # sub-DTM (02_build_models.R:543-547)
+                local_binary = binary.join(members, "doc_id").cache()
+                best_k, best_score = None, float("-inf")
+                try:
+                    for k in ks:
+                        probe = lda_topic_assignments(sub, k, _probe_seed(cfg.seed, cid, k), cfg.lda_search_iter)
+                        probe_assign = probe.select("doc_id", F.col("topic").alias("cluster_id"))
+                        probe_coh = cluster_coherence(
+                            tfidf.join(members, "doc_id"), probe_assign, n_sub, cfg.top_m,
+                            binary=local_binary,
+                        )
+                        score_row = probe_coh.agg(F.avg("coherence")).first()
+                        score = score_row[0] if score_row and score_row[0] is not None else float("-inf")
+                        if score > best_score:
+                            best_k, best_score = k, score
+                finally:
+                    local_binary.unpersist()
+                if best_k is None or best_score >= cfg.coherence_threshold:
+                    return None
+                final = lda_topic_assignments(sub, best_k, _probe_seed(cfg.seed, cid, best_k), cfg.lda_final_iter)
+                # argmax materialized inside the thunk so unpersist is safe;
+                # result is candidate-sized (doc_id, cluster_id) rows.
+                return materialize(final.select(
+                    "doc_id", (F.lit(base_id) + F.col("topic")).cast("long").alias("cluster_id")
+                ))
+            finally:
+                sub.unpersist()
+
+        if big:
+            # deterministic id blocks continue past the small candidates';
+            # ids are provisional either way — renumber compacts after.
+            big_bases = [
+                (cid, max_id + 1 + (len(small) + i) * max_k) for i, cid in enumerate(big)
+            ]
+            minted_parts = overlap(
+                *(partial(fit_big_candidate, *cb) for cb in big_bases),
+                max_workers=cfg.big_fit_parallelism,
+            )
+            minted_parts = [m for m in minted_parts if m is not None]
+            if minted_parts:
+                all_minted = minted_parts[0]
+                for m in minted_parts[1:]:
+                    all_minted = all_minted.unionByName(m)
+                out = out.join(all_minted.select("doc_id"), "doc_id", "left_anti").unionByName(all_minted)
+
+        # materialize once (refine() re-checkpoints after renumber), then
+        # derive which candidates actually split from the minted-id blocks:
+        # a candidate's docs either ALL keep their original id or ALL land in
+        # its deterministic block [max_id+1+i*max_k, +max_k), so "docs moved"
+        # ⟺ "an id from the block is present". ONE distinct over the k-ish
+        # cluster ids replaces the old full-width old⋈new join + distinct
+        # (guide §2.4 — the join was a per-round shuffle of the whole
+        # assignment table at 100 TB).
+        out = materialize(out)
+        block_owner = list(small) + list(big)  # block i ↔ candidate order
+        new_ids = [int(r["cluster_id"]) for r in out.select("cluster_id").distinct().collect()]
+        split_ids = sorted(
+            {block_owner[(x - max_id - 1) // max_k] for x in new_ids if x > max_id}
+        )
+        return out, split_ids
+    finally:
         if own_binary:
             binary.unpersist()
-        return assignments, []
-    assignments = assignments.select(
-        "doc_id", F.col("cluster_id").cast("long").alias("cluster_id")
-    )
-    max_k = max(cfg.k_range)
-    small = sorted(c for c, s in cand_sizes.items() if s <= cfg.local_fit_max_docs)
-    big = sorted(c for c in cand_sizes if c not in set(small))
-    out = assignments
-    spark = assignments.sparkSession
-
-    if small:
-        # deterministic non-overlapping id blocks: candidate i gets
-        # [max_id + 1 + i*max_k, ... + max_k) — renumber compacts later.
-        bases = spark.createDataFrame(
-            [(c, max_id + 1 + i * max_k) for i, c in enumerate(small)],
-            schema="cluster_id long, base_id long",
-        )
-        member_counts = (
-            tfidf.select("doc_id", "term", "tf")
-            .join(assignments, "doc_id")
-            .join(F.broadcast(bases), "cluster_id")
-        )
-        grouped = member_counts.groupBy("cluster_id").applyInPandas(
-            _make_group_splitter(cfg), schema="doc_id long, cluster_id long"
-        )
-        # materialize ONCE (guide §5): grouped feeds both the anti-join and
-        # the union leg below. Left lazy, each consumer re-executes the
-        # whole FlatMapGroupsInPandas — i.e. every candidate's probe +
-        # final LDA fit ran TWICE per split round (ReuseExchange only
-        # dedupes the shuffle BELOW the Python node, not the node itself;
-        # measured r17 at sf0.1: m5's split stage 4.5 s → 2.9 s).
-        grouped = materialize(grouped)
-        out = out.join(grouped.select("doc_id"), "doc_id", "left_anti").unionByName(grouped)
-
-    def fit_big_candidate(cid: int, base_id: int) -> DataFrame | None:
-        """Probe + final MLlib LDA for ONE oversized candidate. A fit reads
-        only its own cluster's members and writes only its own id block,
-        so the candidates are independent and overlap instead of
-        serializing on the driver (the reference's loop is serial,
-        02_build_models.R:487-564 — at 100× many >local_fit_max_docs
-        low-coherence clusters would make that the refine wall-clock)."""
-        members = assignments.where(F.col("cluster_id") == cid).select("doc_id")
-        sub = tf_vectors.join(members, "doc_id").cache()
-        try:
-            n_sub = sub.count()
-            if n_sub < cfg.min_docs:
-                return None
-            ks = [k for k in cfg.k_range if k < n_sub]
-            # cluster-local probe scoring: D(w)/N from the cluster's own
-            # sub-DTM (02_build_models.R:543-547)
-            local_binary = binary.join(members, "doc_id").cache()
-            best_k, best_score = None, float("-inf")
-            for k in ks:
-                probe = lda_topic_assignments(sub, k, _probe_seed(cfg.seed, cid, k), cfg.lda_search_iter)
-                probe_assign = probe.select("doc_id", F.col("topic").alias("cluster_id"))
-                probe_coh = cluster_coherence(
-                    tfidf.join(members, "doc_id"), probe_assign, n_sub, cfg.top_m,
-                    binary=local_binary,
-                )
-                score_row = probe_coh.agg(F.avg("coherence")).first()
-                score = score_row[0] if score_row and score_row[0] is not None else float("-inf")
-                if score > best_score:
-                    best_k, best_score = k, score
-            local_binary.unpersist()
-            if best_k is None or best_score >= cfg.coherence_threshold:
-                return None
-            final = lda_topic_assignments(sub, best_k, _probe_seed(cfg.seed, cid, best_k), cfg.lda_final_iter)
-            # argmax materialized inside the thunk so unpersist is safe;
-            # result is candidate-sized (doc_id, cluster_id) rows.
-            return materialize(final.select(
-                "doc_id", (F.lit(base_id) + F.col("topic")).cast("long").alias("cluster_id")
-            ))
-        finally:
-            sub.unpersist()
-
-    if big:
-        # deterministic id blocks continue past the small candidates';
-        # ids are provisional either way — renumber compacts after.
-        big_bases = [
-            (cid, max_id + 1 + (len(small) + i) * max_k) for i, cid in enumerate(big)
-        ]
-        minted_parts = overlap(
-            *(partial(fit_big_candidate, *cb) for cb in big_bases),
-            max_workers=cfg.big_fit_parallelism,
-        )
-        minted_parts = [m for m in minted_parts if m is not None]
-        if minted_parts:
-            all_minted = minted_parts[0]
-            for m in minted_parts[1:]:
-                all_minted = all_minted.unionByName(m)
-            out = out.join(all_minted.select("doc_id"), "doc_id", "left_anti").unionByName(all_minted)
-
-    # materialize once (refine() re-checkpoints after renumber), then
-    # derive which candidates actually split from the minted-id blocks:
-    # a candidate's docs either ALL keep their original id or ALL land in
-    # its deterministic block [max_id+1+i*max_k, +max_k), so "docs moved"
-    # ⟺ "an id from the block is present". ONE distinct over the k-ish
-    # cluster ids replaces the old full-width old⋈new join + distinct
-    # (guide §2.4 — the join was a per-round shuffle of the whole
-    # assignment table at 100 TB).
-    out = materialize(out)
-    block_owner = list(small) + list(big)  # block i ↔ candidate order
-    new_ids = [int(r["cluster_id"]) for r in out.select("cluster_id").distinct().collect()]
-    split_ids = sorted(
-        {block_owner[(x - max_id - 1) // max_k] for x in new_ids if x > max_id}
-    )
-    if own_binary:
-        binary.unpersist()
-    return out, split_ids
 
 
 def merge_similar_clusters(

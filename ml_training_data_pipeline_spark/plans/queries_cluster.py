@@ -19,7 +19,7 @@ from ..operators.centroids import (
     group_withinss,
     merge_components,
 )
-from ..operators.coherence import binary_doc_term, prob_coherence
+from ..operators.refine import cluster_coherence
 from ..operators.tfidf import cluster_term_scores, tfidf_long
 from .oracle_fragments import tfidf_cte, toks_cte, unigram_cte
 from .registry import query
@@ -222,14 +222,12 @@ def c6_prob_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tfidf = tfidf_long(docs)
     assignments = docs.select("doc_id", F.col("lang").alias("cluster_id"))
-    topterms = cluster_term_scores(tfidf, assignments, top_n=5).select("cluster_id", "term", "rank")
-    # binary DFM off the CHECKPOINTED tf-idf keys, not a second
-    # tokenize+distinct pass: term_counts groups on exactly (doc_id,
-    # term) over the same unigram/no-stopword token stream, so the key
-    # set IS the binarized DFM (r16; halves the query's corpus passes)
-    binary = binary_doc_term(tfidf.select("doc_id", "term"), assume_unique=True)
-    n_docs = binary.select("doc_id").distinct().count()
-    return prob_coherence(binary, topterms, n_docs)
+    # cluster_coherence reads the binary DFM off the CHECKPOINTED tf-idf
+    # keys, not a second tokenize+distinct pass: term_counts groups on
+    # exactly (doc_id, term) over the same unigram/no-stopword token
+    # stream, so the key set IS the binarized DFM
+    n_docs = tfidf.select("doc_id").distinct().count()
+    return cluster_coherence(tfidf, assignments, n_docs)
 
 
 # --- C7: QA summary (M12) --------------------------------------------------------
@@ -292,13 +290,10 @@ def c7_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tfidf = tfidf_long(docs)
     assignments = docs.select("doc_id", F.col("lang").alias("cluster_id"))
-    topterms = cluster_term_scores(tfidf, assignments, top_n=5).select("cluster_id", "term", "rank")
     # same key-set identity as c6: the checkpointed tf-idf frame is one
-    # row per (doc_id, term) over the identical token stream — no second
-    # tokenize+distinct pass for the binary DFM
-    binary = binary_doc_term(tfidf.select("doc_id", "term"), assume_unique=True)
-    n_docs = binary.select("doc_id").distinct().count()
-    coh = prob_coherence(binary, topterms, n_docs)
+    # row per (doc_id, term) over the identical token stream
+    n_docs = tfidf.select("doc_id").distinct().count()
+    coh = cluster_coherence(tfidf, assignments, n_docs)
     sizes = (
         tfidf.join(assignments, "doc_id")
         .groupBy("cluster_id")

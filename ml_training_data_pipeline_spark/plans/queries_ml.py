@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from ..io.sources import load_table, scratch_dir
 from ..operators.cluster import ClusterResult, cluster_sizes, fit_kmeans
 from ..operators.materialize import materialize, overlap
-from ..operators.refine import RefineConfig, refine
-from ..operators.tfidf import tfidf_long
+from ..operators.refine import RefineConfig, cluster_coherence, refine
+from ..operators.tfidf import cluster_term_scores, tfidf_long
 from ..operators.vectorize import (
     fit_tfidf_vectorizer,
     tokens_frame,
@@ -213,8 +213,6 @@ def phase1_summary(
     Shared by ep3 (persisted-state inputs) and its in-memory parity test."""
     from ..functions.llm import label_prompt, llm_complete
     from ..operators.coherence import binary_doc_term, prob_coherence
-    from ..operators.refine import cluster_coherence
-    from ..operators.tfidf import cluster_term_scores
 
     # the long DFM feeds the gate coherence, the refine loop, the final
     # coherence, and term extraction — cache it once instead of re-running

@@ -23,10 +23,15 @@ like the driver would:
 ``--ledger PATH`` additionally writes a per-query shuffle ledger
 ``{name: {exchanges, broadcasts, bnlj, scans, aqe_shuffle_reads,
 checkpointed, segments, pre_exchanges, pre_broadcasts, pre_bnlj,
-pre_scans}}`` to PATH for round-over-round diffing (committed as
-PLANS_r{N}.json). The ``pre_*`` columns sum the counters over every
-pre-checkpoint plan segment (see ``CkptRecorder``) — without them an
-eager ``localCheckpoint`` truncates the visible plan and a regression
+pre_scans, jobs}}`` to PATH for round-over-round diffing (committed as
+PLANS_r{N}.json). ``jobs`` counts every Spark job the query ran — its
+operators' internal checkpoints and collects as well as the final
+collect — under the job group ``audit:<name>`` (see
+``run_in_job_group``); the static counters cannot show a change that
+removes jobs while adding exchanges to the recorded segments. The
+``pre_*`` columns sum the counters over every pre-checkpoint plan
+segment (see ``CkptRecorder``) — without them an eager
+``localCheckpoint`` truncates the visible plan and a regression
 upstream of the checkpoint is invisible (ep12 read ``{exchanges: 0,
 scans: 0}`` in PLANS_r13.json despite two upstream aggregation scans). The
 remaining regression class the correctness suite cannot catch is a quiet
@@ -76,6 +81,27 @@ def ledger_counts(static_plan: str, final_plan: str = "") -> dict[str, int]:
 
 
 PRE_KEYS = ("exchanges", "broadcasts", "bnlj", "scans")
+
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def run_in_job_group(spark, group: str, fn):
+    """Call ``fn()`` with every Spark job it submits in job group ``group``
+    (``overlap()`` threads inherit it) and return ``(fn(), jobs)``: the
+    number of jobs in the group. The caller's group is restored before
+    counting, and the listener bus is drained first — the status tracker
+    learns of a job from its asynchronous start event, so an immediate
+    read can miss the last collect."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key, value in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(key, value)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class CkptRecorder:
@@ -220,7 +246,8 @@ def main() -> int:
             # x=3/s=2 in isolation but x=6/s=4 after the m-family in the
             # first r14 sweep). Audit every query against a cold cache.
             spark.catalog.clearCache()
-            with CkptRecorder() as rec:
+
+            def audit_one() -> tuple[str, dict[str, int] | None]:
                 df = qs[name](spark, args.sf_dir)
                 qe = df._jdf.queryExecution()
                 # pre-materialization executedPlan: EnsureRequirements has
@@ -229,15 +256,20 @@ def main() -> int:
                 # (sparkPlan() is NO use here: it predates EnsureRequirements,
                 # so it contains zero Exchange nodes by construction)
                 plan = qe.executedPlan().toString()
-                if args.ledger is not None:
-                    # collect(), not count(): count() builds a NEW
-                    # QueryExecution (agg-on-top), leaving THIS plan's
-                    # AdaptiveSparkPlan forever isFinalPlan=false — collect()
-                    # executes this exact plan so the AQE final plan exists.
-                    # Bounded: ledger runs at sf0.001 only.
-                    df.collect()
-                    ledger[name] = ledger_counts(plan, qe.executedPlan().toString())
-                    ledger[name].update(rec.pre_counts())
+                if args.ledger is None:
+                    return plan, None
+                # collect(), not count(): count() builds a NEW
+                # QueryExecution (agg-on-top), leaving THIS plan's
+                # AdaptiveSparkPlan forever isFinalPlan=false — collect()
+                # executes this exact plan so the AQE final plan exists.
+                # Bounded: ledger runs at sf0.001 only.
+                df.collect()
+                return plan, ledger_counts(plan, qe.executedPlan().toString())
+
+            with CkptRecorder() as rec:
+                (plan, counts), jobs = run_in_job_group(spark, f"audit:{name}", audit_one)
+            if counts is not None:
+                ledger[name] = {**counts, **rec.pre_counts(), "jobs": jobs}
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             errors[name] = repr(e)[:200]
             print(f"[{i+1}/{len(names)}] {name}: ERROR {errors[name]}", flush=True)
@@ -256,7 +288,7 @@ def main() -> int:
         status = f"VIOLATION {bad}" if bad else "ok"
         led = ledger.get(name)
         led_s = (
-            " x={exchanges}/b={broadcasts}/s={scans}".format(**led) if led else ""
+            " x={exchanges}/b={broadcasts}/s={scans}/j={jobs}".format(**led) if led else ""
         )
         print(
             f"[{i+1}/{len(names)}] {name}: {status}"
@@ -281,7 +313,8 @@ def main() -> int:
                         for k in ("exchanges", "broadcasts", "bnlj", "scans",
                                   "aqe_shuffle_reads", "checkpointed",
                                   "segments", "pre_exchanges",
-                                  "pre_broadcasts", "pre_bnlj", "pre_scans")
+                                  "pre_broadcasts", "pre_bnlj", "pre_scans",
+                                  "jobs")
                     }
                     if ledger
                     else {},

@@ -9,6 +9,7 @@ splits on it"). Formula (02_build_models.R:462-471):
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
@@ -16,7 +17,10 @@ from ml_training_data_pipeline_spark.operators.coherence import (
     binary_doc_term,
     prob_coherence,
 )
-from ml_training_data_pipeline_spark.operators.refine import _local_prob_coherence
+from ml_training_data_pipeline_spark.operators.refine import (
+    _local_prob_coherence,
+    cluster_coherence,
+)
 
 # 4 docs: D(a)=3, D(b)=2, D(c)=2; D(a,b)=2, D(a,c)=2, D(b,c)=1; N=4
 DOCS = [
@@ -44,6 +48,25 @@ def test_prob_coherence_hand_computed(spark):
     out = prob_coherence(binary, topic, n_docs=4).collect()
     assert len(out) == 1
     assert out[0]["coherence"] == pytest.approx(EXPECTED, abs=1e-6)
+
+
+def test_cluster_coherence_reads_ranking_from_checkpoint(spark):
+    """The gate end to end on the same fixture: every doc in cluster 1 and
+    unit weights, so summed TF-IDF ranks a (3 docs), then b and c (2 docs,
+    tie broken by term), then d — the topic above. The ranking reaches
+    prob_coherence as a checkpoint scan, so the gate's executed plan holds
+    no ranking window."""
+    rows = [(d, t, 1.0) for d, terms in DOCS for t in terms]
+    tfidf = spark.createDataFrame(rows, schema="doc_id long, term string, weight double")
+    assignments = spark.createDataFrame(
+        [(d, 1) for d, _ in DOCS], schema="doc_id long, cluster_id long"
+    )
+    coh = cluster_coherence(tfidf, assignments, n_docs=4, top_m=3)
+    out = coh.collect()
+    assert len(out) == 1
+    assert out[0]["coherence"] == pytest.approx(EXPECTED, abs=1e-6)
+    plan = coh._jdf.queryExecution().executedPlan().toString()
+    assert not re.findall(r"\bWindow(GroupLimit)?\b", plan), plan
 
 
 def test_local_coherence_twin_matches_dataframe_version():

@@ -107,6 +107,51 @@ def test_forced_split_big_path_threaded(spark, corpus, fitted):
     assert max(r["cluster_id"] for r in rows) > 2
 
 
+def test_big_path_fit_failure_releases_cached_frames(spark, corpus, fitted, monkeypatch):
+    """A raising MLlib fit on the big path surfaces its own exception and
+    leaves nothing cached: not the candidate's ``local_binary`` (filled
+    by the first probe, then the second probe's fit raises) and not the
+    function's own binarized DFM. The first probe is a stub topic split,
+    not an EM fit, whose model keeps its GraphX graph persisted.
+    Checkpoint RDDs are not counted — a ``materialize()`` output is held
+    until its frame is collected."""
+    import ml_training_data_pipeline_spark.operators.refine as refine_mod
+
+    vecs, tfidf = fitted
+    assignments = corpus.select("doc_id", F.lit(1).alias("cluster_id"))
+    cfg = RefineConfig(
+        coherence_threshold=0.9,
+        k_range=(2, 3),
+        min_docs=3,
+        top_m=3,
+        lda_search_iter=5,
+        lda_final_iter=10,
+        local_fit_max_docs=0,
+    )
+    fits = []
+
+    def failing_fit(tf_vectors, k, seed, max_iter):
+        fits.append(k)
+        if len(fits) > 1:
+            raise RuntimeError("injected LDA failure")
+        return tf_vectors.select("doc_id", (F.col("doc_id") % k).cast("int").alias("topic"))
+
+    monkeypatch.setattr(refine_mod, "lda_topic_assignments", failing_fit)
+
+    def cached_rdds() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i, r in rdds.items() if not r.rdd().isCheckpointed()}
+
+    before = cached_rdds()
+    with pytest.raises(RuntimeError, match="injected LDA failure"):
+        split_low_coherence_clusters(
+            vecs.select("doc_id", "tf"), tfidf, assignments, n_docs=6, cfg=cfg
+        )
+    assert fits == [2, 3]
+    # no new cached RDD; earlier tests' RDDs may be cleaned meanwhile
+    assert not cached_rdds() - before
+
+
 def test_split_respects_min_docs_guard(spark, corpus, fitted):
     vecs, tfidf = fitted
     assignments = corpus.select("doc_id", "cluster_id")

@@ -76,6 +76,30 @@ def test_ledger_counts_single_partition_and_bnlj():
     assert (c["exchanges"], c["bnlj"], c["aqe_shuffle_reads"]) == (2, 1, 0)
 
 
+def test_ledger_jobs_count_query_internal_jobs_only(spark):
+    """``jobs`` counts what a query ran under its ``audit:<name>`` group:
+    the internal collect its builder runs as well as the final collect,
+    and nothing run before, after or under another group."""
+    pa = _load_script("plan_audit")
+
+    def query_with_internal_collect():
+        spark.range(5).collect()  # e.g. a candidate list driving job structure
+        return spark.range(3)
+
+    caller_group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+    spark.range(7).count()  # outside the audit groups
+    _, other = pa.run_in_job_group(spark, "audit:other", lambda: spark.range(9).collect())
+    rows, jobs = pa.run_in_job_group(
+        spark, "audit:probe", lambda: query_with_internal_collect().collect()
+    )
+    spark.range(7).count()  # after: the caller's group is restored
+    assert len(rows) == 3
+    assert (other, jobs) == (1, 2)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") == caller_group
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("audit:probe")) == 2
+
+
 # --- the headline-10 plan-shape pin (the round-over-round diff anchor) --------
 
 # (exchanges, broadcasts, bnlj, scans) on the static executedPlan at
